@@ -11,11 +11,20 @@ A pipeline here = ordered tasks over a shared context:
   ensure_table >> ingest (paginated scan → flatten) >> merge (upsert)
 which is exactly the reference's task graph, with the fetch/persist
 loop replaced by the engine's distributed operators.
+
+Every DAG run issues exactly ONE merge, whatever the page count: the
+worklogs cursor walk spools its pages to parquet under the table root
+(driver memory O(page)) and the merge reads the spool back as one
+batch, ordered by a running scan ordinal; the issues offset scan fans
+out into one DataFrame; users are one page. Records held on the driver
+enter Spark as Arrow-built ``LocalRelation``s, never as Python RDDs.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -29,12 +38,15 @@ from airflow_jira_etl_spark.entities import (
 from airflow_jira_etl_spark.sinks.parquet_upsert import ParquetUpsertTable
 from airflow_jira_etl_spark.scratch import SCRATCH as _SCRATCH_DEFAULT
 from airflow_jira_etl_spark.sources.paged_rest import (
+    SCAN_ORDINAL,
     Fetcher,
     cursor_scan,
     offset_scan_parallel,
     raw_json_to_flat,
+    read_spool,
     records_to_flat_df,
     single_page_scan,
+    spool_pages,
 )
 
 # per-entity emulator defaults: each entity's endpoint SHAPE differs
@@ -152,25 +164,36 @@ def worklog_pipeline(
 
     @p.task("ingest_pages", upstream=["ensure_table"])
     def ingest_pages(ctx: dict) -> None:
-        # LAZY: the cursor generator flows through the context and each
-        # page becomes a (LocalRelation) DataFrame only when
-        # merge_upsert reaches it — peak driver memory stays O(page),
-        # matching the reference's fetch-then-persist loop
-        # (worklog_processor.py:80-106). The previous list
-        # comprehension exhausted the whole cursor up front, pinning
-        # EVERY page's rows in driver-held plans until the merge task
-        # finished: O(total extract) driver memory, an OOM on a long
-        # backfill.
-        ctx["batches"] = (
-            records_to_flat_df(spark, page, WORKLOG_MAPPING)
-            for page in cursor_scan(fetcher, initial_url)
-            if page
+        # SPOOL: each cursor page is written to a parquet file under the
+        # table root as soon as it arrives (spool_pages), so peak driver
+        # memory stays O(page), matching the reference's fetch-then-
+        # persist loop (worklog_processor.py:80-106), while the merge
+        # below still sees the whole walk as ONE batch: one apply per
+        # DAG run, not one copy-on-write rewrite per page. The running
+        # scan ordinal keeps the reference's sequential last-writer-
+        # wins across pages. A failed walk removes its partial spool
+        # and leaves the table untouched; the '.staging_' prefix lets
+        # vacuum() sweep a spool a crashed process left behind.
+        spool = os.path.join(
+            ctx["table"].root, f".staging_spool_{uuid.uuid4().hex[:8]}"
         )
+        try:
+            n = spool_pages(cursor_scan(fetcher, initial_url), spool)
+        except BaseException:
+            shutil.rmtree(spool, ignore_errors=True)
+            raise
+        ctx["spool"] = spool if n else None
 
     @p.task("merge_upsert", upstream=["ingest_pages"])
     def merge_upsert(ctx: dict) -> None:
-        for batch in ctx["batches"]:
-            ctx["table"].apply(batch)
+        spool = ctx["spool"]
+        if spool is None:
+            return
+        try:
+            flat = raw_json_to_flat(read_spool(spark, spool), WORKLOG_MAPPING)
+            ctx["table"].apply(flat, ordinal_col=SCAN_ORDINAL)
+        finally:
+            shutil.rmtree(spool, ignore_errors=True)
 
     return p
 

@@ -249,7 +249,12 @@ class ParquetUpsertTable:
     ) -> None:
         """MERGE a batch of updates. Default semantics: last-writer-wins
         on the key (``ordinal_col`` breaks intra-batch duplicate-key
-        ties — see operators/upsert.py). With ``combine`` (a column →
+        ties — see operators/upsert.py). An ``ordinal_col`` the table
+        does not store (every column is unstored before the first
+        write) is batch-only: it orders the batch's duplicate keys and
+        is dropped before the write, so a caller can rank rows by
+        their source order (e.g. a page walk's running ordinal)
+        without storing it. With ``combine`` (a column →
         sum/min/max map), the merge FOLDS the batch into the stored rows
         instead — the incremental-materialized-view refresh (see
         operators/upsert.merge_aggregate; replays are not idempotent in
@@ -298,9 +303,14 @@ class ParquetUpsertTable:
         # would wedge every subsequent read (manifest says int, files
         # say INT64)
         table_schema = manifest.get("schema") if manifest else None
+        batch_only = ordinal_col is not None and ordinal_col not in {
+            nm for nm, _ in table_schema or []
+        }
         if table_schema is not None:
             old_names = {nm for nm, _ in table_schema}
-            upd_names = set(updates.columns)
+            upd_names = set(updates.columns) - (
+                {ordinal_col} if batch_only else set()
+            )
             if upd_names != old_names and not self.evolve_schema:
                 raise ValueError(
                     f"schema mismatch (evolve_schema=False): table has "
@@ -410,6 +420,11 @@ class ParquetUpsertTable:
                 base = base.withColumn(
                     _BUCKET, self.bucketer(base, self.keys, n_buckets)
                 )
+                if batch_only:
+                    # stored rows lose to every batch row regardless of
+                    # the ordinal (upsert ranks by source first), so a
+                    # NULL fills the column the union needs
+                    base = base.withColumn(ordinal_col, F.lit(None).cast("long"))
             else:
                 # first write (or all-new buckets): dedup within the batch
                 base = upd.limit(0)
@@ -434,6 +449,8 @@ class ParquetUpsertTable:
                     cluster_cols=[_BUCKET],
                     evolve_schema=self.evolve_schema,
                 )
+                if batch_only:
+                    merged = merged.drop(ordinal_col)
 
             # type contract, checked on what the files WILL hold: the
             # merged plan's schema (union widening already reconciled a

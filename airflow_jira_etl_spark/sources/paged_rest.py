@@ -7,13 +7,14 @@ Reference behavior being reproduced (SURVEY.md §2A):
 * A2 cursor-paginated scan: follow ``metadata.next`` until absent
   (``worklog_processor.py:80-108``) — inherently SERIAL (each cursor
   comes from the previous response); the Spark design keeps the cursor
-  walk on the driver as a lightweight page iterator and parallelizes
-  everything downstream (parse → flatten → sink).
+  walk on the driver as a lightweight page iterator, spools each page
+  to parquet as it arrives (``spool_pages``) and parallelizes
+  everything downstream (parse → flatten → sink) over the whole walk.
 * A3 offset-paginated scan: page 0 discovers ``total``
   (``issue_processor.py:141-142``), then every offset is independent —
-  the scan FANS OUT across executors via ``spark.range(n_pages)`` +
-  ``mapInPandas``, the key scan-parallelism win over the reference's
-  serial loop. (The reference's ``<=`` off-by-one that refetches a
+  the scan FANS OUT across executors via ``spark.range`` over the
+  offsets + ``mapInPandas``, the key scan-parallelism win over the
+  reference's serial loop. (The reference's ``<=`` off-by-one that refetches a
   trailing empty page, :129, is deliberately not reproduced.)
 * A4 single-page scan (``users_processor.py:53-95``) = offset scan
   with one page.
@@ -56,14 +57,21 @@ RETRY_MAX_S = 10.0
 
 def with_retry(
     fn: Callable[[], object],
-    attempts: int = RETRY_ATTEMPTS,
-    min_wait: float = RETRY_MIN_S,
-    max_wait: float = RETRY_MAX_S,
-    sleep: Callable[[float], None] = time.sleep,
+    attempts: int | None = None,
+    min_wait: float | None = None,
+    max_wait: float | None = None,
+    sleep: Callable[[float], None] | None = None,
 ) -> object:
     """The reference's tenacity policy (5 attempts, exp backoff 4-10 s,
     multiplier 1 — ``jira_base_processor.py:14-17``) without the
-    dependency."""
+    dependency. Omitted arguments read the module's ``RETRY_*`` bounds
+    and ``time.sleep`` at call time, not at definition time, so a
+    caller (or a fault test) can retune the policy of every scan entry
+    point by setting the module attributes."""
+    attempts = RETRY_ATTEMPTS if attempts is None else attempts
+    min_wait = RETRY_MIN_S if min_wait is None else min_wait
+    max_wait = RETRY_MAX_S if max_wait is None else max_wait
+    sleep = time.sleep if sleep is None else sleep
     last: Exception | None = None
     for attempt in range(attempts):
         try:
@@ -169,8 +177,14 @@ def offset_scan_parallel(
 ) -> DataFrame:
     """A3 fan-out: fetch page 0 on the driver to learn ``total`` and
     the server's ``maxResults`` stride, then fetch the remaining
-    offsets IN PARALLEL on executors (one task per page via
-    ``spark.range``), returning a DataFrame of raw JSON record strings.
+    offsets IN PARALLEL on executors, returning a DataFrame of raw JSON
+    record strings.
+
+    Page 0 enters the plan as a JVM ``LocalRelation``; the remaining
+    offsets come from ``spark.range(stride, total, stride)`` split into
+    ``min(page_parallelism, pages)`` partitions, and ``mapInPandas``
+    fetches each partition's offsets. No plan input is a Python RDD
+    and no round-robin shuffle spreads the offsets.
 
     At 100 TB-scale ingest the fetch cost dominates; this turns an
     O(pages) serial wall-clock into O(pages / executors)."""
@@ -185,19 +199,14 @@ def offset_scan_parallel(
     first = with_retry(lambda: fetcher(url, params))
     total, stride = page_plan(first)  # type: ignore[arg-type]
     total = total or 0
-    first_records = [json.dumps(r) for r in first.get(records_key, [])]  # type: ignore[union-attr]
-
-    offsets = list(range(stride, total, stride))  # page 0 already fetched
-    first_df = spark.createDataFrame(
-        [(r,) for r in first_records], T.StructType([T.StructField("raw", T.StringType())])
-    )
-    if not offsets:
+    first_df = _raw_json_df(spark, first.get(records_key, []))  # type: ignore[union-attr]
+    n_pages = len(range(stride, total, stride))  # page 0 already fetched
+    if not n_pages:
         return first_df
 
-    offsets_df = spark.createDataFrame(
-        [(o,) for o in offsets], T.StructType([T.StructField("start_at", T.LongType())])
-    ).repartition(min(page_parallelism, len(offsets)))
-
+    offsets_df = spark.range(
+        stride, total, stride, numPartitions=min(page_parallelism, n_pages)
+    )
     base_params = dict(params or {})
 
     def fetch_pages(batches):  # executor-side: one fetch per offset row
@@ -205,7 +214,7 @@ def offset_scan_parallel(
 
         for pdf in batches:
             rows = []
-            for start_at in pdf["start_at"]:
+            for start_at in pdf["id"]:
                 p = dict(base_params)
                 p["startAt"] = int(start_at)
                 page = with_retry(lambda p=p: fetcher(url, p))
@@ -214,6 +223,40 @@ def offset_scan_parallel(
 
     rest_df = offsets_df.mapInPandas(fetch_pages, schema="raw string")
     return first_df.unionByName(rest_df)
+
+
+SCAN_ORDINAL = "__scan_ord"
+
+
+def spool_pages(pages: Iterator[list[dict]], spool_dir: str) -> int:
+    """Write each non-empty page to ``spool_dir`` as one parquet file of
+    raw JSON strings plus ``SCAN_ORDINAL``, the record's position in the
+    whole walk, and return the number of records written. The files
+    are written with ``pyarrow``, not Spark, one page at a time: the
+    driver holds one page, and no Spark job runs per page. The
+    directory is created with the first page, so an empty walk leaves
+    nothing behind."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    n = 0
+    for k, page in enumerate(pages):
+        if not page:
+            continue
+        os.makedirs(spool_dir, exist_ok=True)
+        table = pa.table({
+            "raw": pa.array([json.dumps(r) for r in page], pa.string()),
+            SCAN_ORDINAL: pa.array(range(n, n + len(page)), pa.int64()),
+        })
+        pq.write_table(table, os.path.join(spool_dir, f"page_{k:06d}.parquet"))
+        n += len(page)
+    return n
+
+
+def read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
+    """The pages :func:`spool_pages` wrote, as one file-scan DataFrame
+    of ``raw`` and ``SCAN_ORDINAL``."""
+    return spark.read.schema(f"raw string, `{SCAN_ORDINAL}` bigint").parquet(spool_dir)
 
 
 def single_page_scan(fetcher: Fetcher, url: str, params: dict | None = None) -> list[dict]:
@@ -234,16 +277,34 @@ def single_page_scan(fetcher: Fetcher, url: str, params: dict | None = None) -> 
 
 # ----------------------------------------------------- parse + flatten
 
+def _raw_json_df(spark: SparkSession, records: list[dict]) -> DataFrame:
+    """Driver-held records as a one-column ``raw`` DataFrame of JSON
+    strings. Built from an Arrow table, so the rows enter the plan as a
+    JVM ``LocalRelation`` in any session, whatever its Arrow setting:
+    evaluating it runs no Python worker, where a ``createDataFrame``
+    over a Python list is a Python-RDD scan that every evaluation
+    re-runs."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    return spark.createDataFrame(
+        pa.table({"raw": pa.array([json.dumps(r) for r in records], pa.string())})
+    )
+
+
 def raw_json_to_flat(
     raw_df: DataFrame,
     mapping: Mapping,
     leaf_types: dict[str, T.DataType] | None = None,
 ) -> DataFrame:
     """Parse raw JSON record strings with the MAPPING-derived schema and
-    apply the compiled flatten — the reference's A5 as one JVM select."""
+    apply the compiled flatten — the reference's A5 as one JVM select.
+    Columns of ``raw_df`` other than ``raw`` (e.g. a scan ordinal) pass
+    through after the flattened ones."""
     schema = mapping_to_schema(mapping, leaf_types)
-    parsed = raw_df.select(F.from_json("raw", schema).alias("r")).select("r.*")
-    return parsed.select(*compile_mapping(mapping, schema))
+    extra = [c for c in raw_df.columns if c != "raw"]
+    parsed = raw_df.select(F.from_json("raw", schema).alias("r"), *extra)
+    parsed = parsed.select("r.*", *extra)
+    return parsed.select(*compile_mapping(mapping, schema), *extra)
 
 
 def records_to_flat_df(
@@ -252,9 +313,5 @@ def records_to_flat_df(
     mapping: Mapping,
     leaf_types: dict[str, T.DataType] | None = None,
 ) -> DataFrame:
-    """Driver-collected records (a cursor page) → flat DataFrame."""
-    raw = spark.createDataFrame(
-        [(json.dumps(r),) for r in records],
-        T.StructType([T.StructField("raw", T.StringType())]),
-    )
-    return raw_json_to_flat(raw, mapping, leaf_types)
+    """Driver-collected records (a single page) → flat DataFrame."""
+    return raw_json_to_flat(_raw_json_df(spark, records), mapping, leaf_types)

@@ -64,7 +64,7 @@ def main() -> None:
         try:
             registry.QUERIES[name](spark, tiny).count()
         except Exception as exc:
-            # flagged in the final CSV too (ADVICE r15): a query whose
+            # warmup_ok=0 in the final CSV (ADVICE r15): a query whose
             # warmup failed absorbs codegen warmup into its first timed
             # run, skewing min-of-N silently otherwise
             warmup_failed.add(name)
@@ -105,11 +105,20 @@ def main() -> None:
         except Exception:
             pass
 
-    print("name,min,median,all")
+    print("\n".join(timing_csv(results, warmup_failed)))
+
+
+def timing_csv(results: dict[str, list[float]], warmup_failed: set[str]) -> list[str]:
+    """The probe's CSV lines, header first. Every row has the same
+    fields; ``warmup_ok`` is 0 for a query whose warm-up failed."""
+    lines = ["name,min,median,all,warmup_ok"]
     for name, ts in results.items():
         s = sorted(ts)
-        flag = ",WARMUP_FAILED" if name in warmup_failed else ""
-        print(f"{name},{min(ts):.3f},{s[len(s)//2]:.3f},{'|'.join(f'{t:.3f}' for t in ts)}{flag}")
+        ok = int(name not in warmup_failed)
+        lines.append(
+            f"{name},{s[0]:.3f},{s[len(s)//2]:.3f},{'|'.join(f'{t:.3f}' for t in ts)},{ok}"
+        )
+    return lines
 
 
 if __name__ == "__main__":

@@ -76,3 +76,20 @@ def test_worst_queries_dict_is_top10_by_min():
     mins = {n: min(p[n] for p in passes) for n in passes[0]}
     want = dict(sorted(mins.items(), key=lambda kv: -kv[1])[:10])
     assert rec["queries"] == {n: round(s, 2) for n, s in want.items()}
+
+
+def test_opt_probe_csv_rows_have_the_header_fields():
+    """Every row of opt_probe's CSV carries the same fields as the
+    header; a failed warm-up shows as warmup_ok=0, not as an extra
+    field on that row only (ADVICE r16)."""
+    import csv
+
+    from airflow_jira_etl_spark.tools.opt_probe import timing_csv
+
+    lines = timing_csv({"q_ok": [0.3, 0.1, 0.2], "q_cold": [2.0]}, {"q_cold"})
+    rows = list(csv.DictReader(lines))
+    assert all(None not in r and len(r) == 5 for r in rows)
+    assert [(r["name"], r["min"], r["median"], r["warmup_ok"]) for r in rows] == [
+        ("q_ok", "0.100", "0.200", "1"),
+        ("q_cold", "2.000", "2.000", "0"),
+    ]

@@ -38,3 +38,44 @@ def test_query_self_provisions_confs(name, spark, sf_dir):
         session._CONFED_SESSIONS.clear()
         for k, v in session.RUNTIME_CONFS.items():
             spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("arrow", ["bench", "unset"])
+def test_ingest_plans_have_no_python_rdd_or_round_robin(arrow, spark):
+    """Driver-held pages enter the plan as a JVM LocalRelation and the
+    offset fan-out spreads its offsets with spark.range: no LogicalRDD
+    leaf (a Python-RDD scan re-run on every evaluation) and no
+    round-robin Exchange — in the bench session and in a foreign one
+    where Arrow for PySpark is unset."""
+    from airflow_jira_etl_spark.sources.paged_rest import (
+        offset_scan_parallel,
+        records_to_flat_df,
+    )
+    from tests.test_ingest import make_offset_fetcher
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key, None)
+    if arrow == "unset":
+        spark.conf.unset(key)
+    try:
+        mapping = {"tempoWorklogId": "tempo_worklog_id", "self": "url"}
+        flat = records_to_flat_df(spark, [{"tempoWorklogId": "7", "self": "u"}], mapping)
+        scan = offset_scan_parallel(
+            spark, make_offset_fetcher(total=23, stride=5), "https://api/search",
+            page_parallelism=2,
+        )
+        for df in (flat, scan):
+            plan = df._jdf.queryExecution().toString()
+            assert "LocalRelation" in plan, plan
+            assert "LogicalRDD" not in plan, plan
+            assert "RoundRobinPartitioning" not in plan, plan
+        assert [r.asDict() for r in flat.collect()] == [
+            {"tempo_worklog_id": "7", "url": "u"}
+        ]
+        assert scan.count() == 23
+        assert records_to_flat_df(spark, [], mapping).count() == 0
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from airflow_jira_etl_spark.pipeline import Pipeline, worklog_pipeline
@@ -39,6 +41,108 @@ def test_worklog_pipeline_end_to_end(spark, tmp_path):
     assert table.count() == 12
     cols = set(table.columns)
     assert {"tempo_worklog_id", "issue_id", "author_id", "url"} <= cols
+
+
+_WL_URL = "https://api/worklogs?page=0"
+
+
+def _wl(wid: int, updated_at: str) -> dict:
+    return {
+        "self": f"w{wid}",
+        "tempoWorklogId": wid,
+        "updatedAt": updated_at,
+        "issue": {"id": 7, "self": "u"},
+        "author": {"accountId": "a", "self": "u"},
+    }
+
+
+def _pages_fetcher(pages: list[list[dict]], fail_page: int | None = None):
+    """Cursor fetcher over explicit record pages; with ``fail_page``,
+    every fetch of that page raises."""
+
+    def fetch(url, params=None):
+        k = int(url.rsplit("page=", 1)[1])
+        if k == fail_page:
+            raise ConnectionError(f"page {k} is down")
+        meta = {"next": f"https://api/worklogs?page={k + 1}"} if k + 1 < len(pages) else {}
+        return {"results": pages[k], "metadata": meta}
+
+    return fetch
+
+
+def _worklogs(spark, root) -> list[tuple]:
+    from airflow_jira_etl_spark.sinks.parquet_upsert import ParquetUpsertTable
+
+    t = ParquetUpsertTable(spark, str(root / "worklogs"), key="tempo_worklog_id")
+    return sorted(map(tuple, t.read().collect()))
+
+
+def test_worklog_run_is_one_merge_with_cross_page_last_writer_wins(spark, tmp_path):
+    """A key served on the first and the third cursor page keeps the
+    third page's row, even where the first page's value sorts later,
+    and the whole walk commits exactly one new generation."""
+    from airflow_jira_etl_spark.sinks.parquet_upsert import _gen_number
+
+    ctx: dict = {}
+    worklog_pipeline(
+        spark, _pages_fetcher([[_wl(1, "day0"), _wl(2, "day0")]]), _WL_URL, str(tmp_path)
+    ).run(ctx)
+    gen0 = _gen_number(ctx["table"].current_generation())
+    pages = [
+        [_wl(1, "z-page1"), _wl(3, "page1")],
+        [_wl(4, "page2")],
+        [_wl(1, "a-page3"), _wl(5, "page3")],
+    ]
+    ctx = {}
+    worklog_pipeline(spark, _pages_fetcher(pages), _WL_URL, str(tmp_path)).run(ctx)
+    table = ctx["table"]
+    assert _gen_number(table.current_generation()) == gen0 + 1
+    got = {r[0]: r[1] for r in table.read().select("tempo_worklog_id", "updated_at").collect()}
+    assert got == {"1": "a-page3", "2": "day0", "3": "page1", "4": "page2", "5": "page3"}
+    assert "__scan_ord" not in table.read().columns
+    assert not [d for d in os.listdir(table.root) if d.startswith(".staging_")]
+
+
+def test_worklog_fault_keeps_table_and_replay_matches_fault_free_run(
+    spark, tmp_path, monkeypatch
+):
+    """A cursor page that keeps failing aborts the run after the retry
+    policy gives up: the table stays at its previous generation and the
+    partial spool is gone. Rerunning the DAG then gives exactly the
+    table of a fault-free run (idempotent replay, SURVEY §3.4)."""
+    from airflow_jira_etl_spark.sources import paged_rest
+
+    # with_retry reads its bounds at call time: no real 4-10 s backoff
+    monkeypatch.setattr(paged_rest, "RETRY_MIN_S", 0.0)
+    monkeypatch.setattr(paged_rest, "RETRY_MAX_S", 0.0)
+    day0 = [[_wl(i, "day0") for i in range(6)]]
+    day1 = [[_wl(i, f"day1-p{k}") for i in range(3 * k, 3 * k + 4)] for k in range(4)]
+
+    ref = tmp_path / "ref"
+    for pages in (day0, day1):
+        worklog_pipeline(spark, _pages_fetcher(pages), _WL_URL, str(ref)).run({})
+
+    root = tmp_path / "faulty"
+    ctx: dict = {}
+    worklog_pipeline(spark, _pages_fetcher(day0), _WL_URL, str(root)).run(ctx)
+    gen0 = ctx["table"].current_generation()
+    tries = []
+    failing = _pages_fetcher(day1, fail_page=2)
+
+    def counted(url, params=None):
+        tries.append(url)
+        return failing(url, params)
+
+    with pytest.raises(ConnectionError, match="page 2"):
+        worklog_pipeline(spark, counted, _WL_URL, str(root)).run({})
+    assert tries.count("https://api/worklogs?page=2") == paged_rest.RETRY_ATTEMPTS
+    table_dir = root / "worklogs"
+    assert ctx["table"].current_generation() == gen0
+    assert not [d for d in os.listdir(table_dir) if d.startswith(".staging_")]
+
+    worklog_pipeline(spark, _pages_fetcher(day1), _WL_URL, str(root)).run({})
+    assert _worklogs(spark, root) == _worklogs(spark, ref)
+    assert len(_worklogs(spark, root)) == 13
 
 
 def test_pipeline_cycle_detection():
